@@ -695,8 +695,10 @@ def contamination_check(
     # the per-eval-doc gram count is ROW-LOCAL: doc_grams explodes the
     # already-distinct word_ngrams_expr array, so n_grams == size(array)
     # — no second explode pass and no groupBy(id) exchange over the
-    # eval gram frame (NULL-text rows produce a NULL size and are
-    # dropped by the inner join below, exactly as explode dropped them)
+    # eval gram frame. NULL-text rows get size(NULL): -1 with ANSI off
+    # (legacy sizeOfNull), NULL under ANSI (the Spark 4 default). Either
+    # way they explode to no grams, never reach `shared`, and the inner
+    # join below drops them — that join, not the size, keeps it exact
     sizes = eval_df.select(
         F.col(id_col).alias("id"),
         F.size(word_ngrams_expr(F.col(text_col), n)).alias("n_grams"))
@@ -838,6 +840,9 @@ def containment_pairs(
     # distinct-gram frame — unbroadcastable at web scale)
     cached = grams = doc_grams(df, text_col, id_col, n) \
         .persist(StorageLevel.MEMORY_AND_DISK)
+    # NOT persisted (unlike ngram_jaccard_pairs / minhash_dedup_pairs):
+    # the n_a and n_b broadcast join-backs each replay this agg over the
+    # gram cache; it rides the release list only as a harmless no-op
     sizes = grams.groupBy("id").agg(F.count(F.lit(1)).alias("n_grams"))
     if max_gram_df is not None:
         hot = (

@@ -242,6 +242,8 @@ def point_in_interval_join(
         # for negative epochs), the division is even, and truncation
         # toward zero on an even division is exact with sign intact —
         # verified against // for negatives and 2^61-scale values.
+        # Bound: exact for |col| < 2^63 - band; within band of Long.MIN
+        # the subtraction overflows (wraps non-ANSI, throws under ANSI).
         # This replaced a decimal(38,0) floor_div ride that planned the
         # same result 5x slower (measured 5.0 -> 1.0 s on the gated
         # interval_join: decimal pmod/divide per row, including

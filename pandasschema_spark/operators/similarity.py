@@ -24,6 +24,8 @@ import typing
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..frames import local_frame
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     """Deterministic double-precision dot product: elementwise product via
@@ -534,8 +536,8 @@ def train_ivf_centroids(
     spark = df.sparkSession
     dim = cents.shape[1]
     for _ in range(n_iter):
-        cdf = spark.createDataFrame(
-            [(i, [float(x) for x in cents[i]]) for i in range(len(cents))],
+        cdf = local_frame(
+            spark, [(i, [float(x) for x in cents[i]]) for i in range(len(cents))],
             "cell int, cvec array<float>",
         )
         memb = assign_probe_cells(
@@ -563,8 +565,8 @@ def train_ivf_centroids(
         nn[nn == 0.0] = 1.0
         cents = new / nn
 
-    return spark.createDataFrame(
-        [(i, [float(x) for x in cents[i]]) for i in range(len(cents))],
+    return local_frame(
+        spark, [(i, [float(x) for x in cents[i]]) for i in range(len(cents))],
         "cell int, cvec array<float>",
     )
 

@@ -23,6 +23,7 @@ import typing
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..frames import local_frame
 from ..validation import _SeriesValidation, is_numeric_spark_type
 
 VIOLATION_FIELDS = [
@@ -55,7 +56,7 @@ class RowCheck:
 
 
 def empty_violations(spark) -> DataFrame:
-    return spark.createDataFrame([], VIOLATION_SCHEMA)
+    return local_frame(spark, [], VIOLATION_SCHEMA)
 
 
 def _empty_exemption(col, spark_type: T.DataType):

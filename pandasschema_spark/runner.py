@@ -31,6 +31,7 @@ import typing
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from .frames import local_frame
 from .schema import Schema
 from .sources.warehouse import Warehouse
 
@@ -185,8 +186,8 @@ class ValidationRunner:
             return 0
         rows = [(self.run_id, "frame", -1, w.column, None, w.message,
                  "__frame__", -1, self.FRAME_BUCKET) for w in warns]
-        fw = spark.createDataFrame(
-            rows,
+        fw = local_frame(
+            spark, rows,
             "run_id string, phase string, row long, column string, "
             "value string, message string, check_id string, seq int, "
             "bucket int")
@@ -216,8 +217,8 @@ class ValidationRunner:
                 partition_by=["run_id", "phase", "bucket"],
             )
             fail_total = violations.count()
-            manifest = spark.createDataFrame(
-                [(self.run_id, self.GLOBAL_BUCKET, 0, "__global__", fail_total, "ok")],
+            manifest = local_frame(
+                spark, [(self.run_id, self.GLOBAL_BUCKET, 0, "__global__", fail_total, "ok")],
                 "run_id string, bucket int, rows_seen long, check_id string, fail_count long, status string",
             ).withColumn("finished_at", F.current_timestamp())
             self.wh.append(manifest, MANIFEST_TABLE)
@@ -255,8 +256,8 @@ class ValidationRunner:
             fails = violations.groupBy("bucket", "check_id").agg(
                 F.count(F.lit(1)).alias("fail_count")
             )
-            all_buckets_df = spark.createDataFrame(
-                [(int(b),) for b in buckets], T.StructType([T.StructField("bucket", T.IntegerType(), False)])
+            all_buckets_df = local_frame(
+                spark, [(int(b),) for b in buckets], T.StructType([T.StructField("bucket", T.IntegerType(), False)])
             )
             manifest = (
                 all_buckets_df.join(rows_seen, "bucket", "left")

@@ -848,6 +848,19 @@ class IsDistinctValidation(_SeriesValidation):
         return ~series.duplicated(keep="first")
 
 
+def _first_seen(rows):
+    """Distinct ``rows`` in first-seen order (quadratic fallback for
+    unhashable cells: binary and array values)."""
+    try:
+        return list(dict.fromkeys(rows))
+    except TypeError:
+        out = []
+        for r in rows:
+            if r not in out:
+                out.append(r)
+        return out
+
+
 class InTableValidation(_SeriesValidation):
     """Engine extension (no reference analog — SURVEY.md §2.4): referential
     integrity against a dimension table. Pass iff the value exists in
@@ -865,7 +878,8 @@ class InTableValidation(_SeriesValidation):
     identical bit-for-bit: a NULL value fails either way (never equal to
     any dim value), NULL dim values match nothing, and an empty dim
     fails every row. Do NOT set it for unbounded dims — the construction
-    pays one driver collect of up to ``inline_max_rows + 1`` rows."""
+    pays a driver collect of up to ``inline_max_rows + 1`` raw rows, plus
+    one of as many distinct values when the raw rows overflow."""
 
     is_global = True
 
@@ -877,9 +891,17 @@ class InTableValidation(_SeriesValidation):
         self._inline_values = None
         super().__init__(**kw)
         if inline_max_rows:
-            rows = (dim_df.select(dim_col).distinct()
-                    .limit(int(inline_max_rows) + 1).collect())
-            if len(rows) <= inline_max_rows:
+            cap = int(inline_max_rows)
+            # the raw slice first: on a driver-side LocalRelation a pruned
+            # limit collects with no Spark job; only a slice that overflows
+            # pays the distinct agg (the decision is the same either way —
+            # <= cap raw rows means <= cap distinct values)
+            rows = dim_df.select(dim_col).limit(cap + 1).collect()
+            if len(rows) > cap:
+                rows = dim_df.select(dim_col).distinct().limit(cap + 1).collect()
+            else:
+                rows = _first_seen(rows)
+            if len(rows) <= cap:
                 # NULL dim values can never equal anything — drop them so
                 # isin() keeps pure two-valued semantics under _leaf
                 self._inline_values = [r[dim_col] for r in rows

@@ -22,3 +22,16 @@ def spark():
     )
     yield s
     s.stop()
+
+
+def pytest_terminal_summary(terminalreporter):
+    # the live-reference differential skips as a whole module when the
+    # reference package is absent; say so out loud instead of leaving one
+    # "s" in the progress line
+    for rep in terminalreporter.stats.get("skipped", []):
+        if rep.nodeid.split("::")[0].endswith("test_reference_differential.py"):
+            reason = rep.longrepr[2] if isinstance(rep.longrepr, tuple) else rep.longrepr
+            terminalreporter.write_line(
+                "VANISHED CHECK: {} skipped ({}); reference parity rests on the "
+                "golden cases in tests/test_validation_parity.py".format(rep.nodeid, reason),
+                yellow=True, bold=True)

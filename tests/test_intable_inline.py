@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pandasschema_spark import Column, Schema
+from pandasschema_spark.frames import local_frame
 from pandasschema_spark.validation import InTableValidation
 
 
@@ -38,6 +39,22 @@ def test_inline_empty_dim_fails_every_row(spark):
     _, rows_global = _violations(spark, dim, inline=0)
     assert rows_inline == rows_global
     assert {r[0] for r in rows_inline} == {1, 2, 3, 4, 5}
+
+
+def test_inline_dedupes_more_raw_rows_than_threshold(spark):
+    # 9 raw rows but only 2 distinct non-NULL values: inlines at a threshold
+    # below the raw count (the slice overflows -> distinct collect) and at
+    # one above it (the raw slice deduped on the driver, first-seen order)
+    raw = [("b",), ("a",), ("b",), (None,), ("a",), ("b",), ("a",), (None,), ("b",)]
+    dim = local_frame(spark, raw, "d string")
+    _, rows_global = _violations(spark, dim, inline=0)
+    for inline in (4, 16):
+        v_in, rows_inline = _violations(spark, dim, inline=inline)
+        assert v_in.is_global is False
+        assert sorted(v_in._inline_values) == ["a", "b"]
+        assert rows_inline == rows_global
+    assert v_in._inline_values == ["b", "a"]
+    assert {r[0] for r in rows_global} == {3, 4, 5}
 
 
 def test_over_threshold_falls_back_to_global(spark):
