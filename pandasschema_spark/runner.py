@@ -136,8 +136,7 @@ class ValidationRunner:
         # column report a green run with the column never validated.
         # Written once per run under the FRAME_BUCKET marker (idempotent
         # overwrite) and surfaced in the summary.
-        frame_warnings = self._write_frame_warnings(
-            spark, schema, validate_columns, row_key)
+        frame_warnings = self._write_frame_warnings(spark, schema, validate_columns)
         done_all = self.completed_buckets(spark)
         # the GLOBAL_BUCKET manifest marker is a PHASE, not a data
         # bucket — counting it would inflate buckets_total /
@@ -172,7 +171,7 @@ class ValidationRunner:
 
     FRAME_BUCKET = -2  # violations-table marker for frame-level warnings
 
-    def _write_frame_warnings(self, spark, schema, validate_columns, row_key):
+    def _write_frame_warnings(self, spark, schema, validate_columns):
         """Run the compile-time precheck against the table schema and
         persist any frame warnings as row=-1 violation rows (phase
         'frame', bucket FRAME_BUCKET — overwritten idempotently on
@@ -180,8 +179,8 @@ class ValidationRunner:
         src = self.wh.read(spark, self.input_table)
         names = {c.name for c in schema.columns}
         cols = [c for c in validate_columns if c in names]
-        result = schema.validate(src.limit(0), columns=cols, row_key=row_key)
-        warns = result.frame_warnings
+        # the pairing pass alone: frame warnings need no validation plan
+        warns = schema._compile_checks(src, cols)[0]
         if not warns:
             return 0
         rows = [(self.run_id, "frame", -1, w.column, None, w.message,

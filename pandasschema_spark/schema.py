@@ -19,7 +19,10 @@ Pairing / precheck semantics are parity with the reference
 Execution diverges deliberately (SURVEY.md §3.4): all row-local checks of
 all columns compile into ONE select (plans/compiler.py); global checks
 (distinctness, referential) are separate small plans unioned in; dtype
-checks run driver-side against df.schema with zero jobs.
+checks run driver-side against df.schema with zero jobs. A Schema compiles
+its row checks once and reuses the projection on every frame with the same
+checked column types (plans/compiler.py); validate many frames with one
+Schema rather than building a new one per frame.
 """
 
 from __future__ import annotations
@@ -177,6 +180,9 @@ class Schema:
             raise PanSchInvalidSchemaError("The ordered field must be a boolean")
         self.columns = list(columns)
         self.ordered = ordered
+        # compiled row projections, reused by repeat validate() calls
+        # (plans/compiler.py module notes)
+        self._projections: dict = {}
 
     def get_column_names(self) -> typing.List[str]:
         return [c.name for c in self.columns]
@@ -195,7 +201,7 @@ class Schema:
         warehouse scale pass a persisted natural key column name/expr
         (e.g. a clip ordinal) to avoid the extra scan.
         """
-        frame_warnings, row_checks, global_checks, early = self._compile_checks(df, columns)
+        frame_warnings, row_checks, global_checks, dtypes, early = self._compile_checks(df, columns)
         if early:
             return ValidationResult(frame_warnings, None)
 
@@ -204,7 +210,8 @@ class Schema:
 
         keyed, row_col = self._with_row_key(df, row_key)
 
-        violations = _compiler.build_row_violations(keyed, row_checks, row_col)
+        violations = _compiler.build_row_violations(
+            keyed, row_checks, row_col, dtypes, self._projections)
         for g_seq, check_id, df_name, warn_name, v, allow_empty in global_checks:
             violations = violations.unionByName(
                 self._plan_global(keyed, row_col, g_seq, check_id, df_name, warn_name, v, allow_empty)
@@ -228,7 +235,7 @@ class Schema:
         have no row-local bit) and on any frame-level precheck warning,
         instead of silently dropping bits.
         """
-        frame_warnings, row_checks, global_checks, early = self._compile_checks(df, columns)
+        frame_warnings, row_checks, global_checks, dtypes, early = self._compile_checks(df, columns)
         if early or frame_warnings:
             raise PanSchArgumentError(
                 "validate_bitmap precheck failed: "
@@ -240,7 +247,8 @@ class Schema:
                 "checks: {}".format([c[1] for c in global_checks])
             )
         keyed, row_col = self._with_row_key(df, row_key)
-        return _compiler.build_violation_bitmap(keyed, row_checks, row_col, keep_clean=keep_clean)
+        return _compiler.build_violation_bitmap(
+            keyed, row_checks, row_col, dtypes, self._projections, keep_clean=keep_clean)
 
     # ------------------------------------------------------------------
     @staticmethod
@@ -255,7 +263,8 @@ class Schema:
     def _compile_checks(self, df, columns):
         """Pairing + per-check compilation shared by validate/validate_bitmap.
 
-        Returns (frame_warnings, row_checks, global_checks, early_return).
+        Returns (frame_warnings, row_checks, global_checks, dtypes,
+        early_return); ``dtypes`` maps df column names to Spark types.
         """
         frame_warnings: typing.List[ValidationWarning] = []
         df_cols = list(df.columns)
@@ -269,7 +278,7 @@ class Schema:
                         )
                     )
                 )
-                return frame_warnings, [], [], True
+                return frame_warnings, [], [], {}, True
             columns_to_pair = self.columns
         else:
             if set(columns).issubset(self.get_column_names()):
@@ -330,7 +339,7 @@ class Schema:
                     )
                 seq += 1
 
-        return frame_warnings, row_checks, global_checks, False
+        return frame_warnings, row_checks, global_checks, dtypes, False
 
     # ------------------------------------------------------------------
     @staticmethod

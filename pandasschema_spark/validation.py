@@ -124,6 +124,11 @@ class _BaseValidation:
     is_global: bool = False
     #: True for frame-level (driver-side, no per-row output) checks
     is_frame_level: bool = False
+    #: True when compiling the check calls a user callable with the live
+    #: DataFrame (it may bind ``df["a"]`` attributes): the schema compiler
+    #: then compiles it on every validate() instead of reusing the
+    #: name-bound projection (plans/compiler.py)
+    reads_frame: bool = False
 
 
 class _SeriesValidation(_BaseValidation):
@@ -656,6 +661,7 @@ class CrossColumnExprValidation(_SeriesValidation):
     """
 
     is_multi_column = True
+    reads_frame = True
 
     def __init__(self, input_columns: typing.List[str],
                  expr_fn: typing.Callable[[typing.Any], SparkColumn],
@@ -705,6 +711,7 @@ class ConditionalValidation(_SeriesValidation):
     from SQL text."""
 
     is_multi_column = True
+    reads_frame = True
 
     def __init__(self, input_columns: typing.List[str],
                  when_fn: typing.Callable[[typing.Any], SparkColumn],
@@ -796,20 +803,16 @@ class CustomRowValidation(_SeriesValidation):
     def pandas_validate_frame(self, frame: pd.DataFrame) -> pd.Series:
         return self._fn(frame)
 
-    def compile_row_predicate(self, df) -> SparkColumn:
-        # the wrapped pandas_udf is pure code (no per-frame state): build
-        # it once per validation instance — re-registering a UDF is ~10
-        # py4j roundtrips of driver-serial plan-build time per validate()
-        # call, which the bench pays on every timed pass
-        udf = getattr(self, "_compiled_udf", None)
-        if udf is None:
-            fn = self._fn
+    def compile_row_predicate(self, frame) -> SparkColumn:
+        """``frame[name]`` gives each input column: the schema compiler
+        passes a name-bound stand-in, so the UDF column reads by name."""
+        fn = self._fn
 
-            def _wrapped(batch: pd.DataFrame) -> pd.Series:
-                return fn(batch).astype("boolean")
+        def _wrapped(batch: pd.DataFrame) -> pd.Series:
+            return fn(batch).astype("boolean")
 
-            udf = self._compiled_udf = F.pandas_udf(_wrapped, T.BooleanType())
-        return _leaf(udf(F.struct(*[df[c] for c in self.input_columns])))
+        udf = F.pandas_udf(_wrapped, T.BooleanType())
+        return _leaf(udf(F.struct(*[frame[c] for c in self.input_columns])))
 
 
 # ---------------------------------------------------------------------------

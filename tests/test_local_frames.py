@@ -41,9 +41,9 @@ def test_driver_frames_are_local_relations(spark, arrow, build, schema):
     assert df.schema == schema  # StructField equality includes nullability
 
 
-def test_validate_clips_plan_build_starts_no_jobs(spark, tmp_path):
-    path = str(tmp_path / "clips")
-    G.write_clips(spark, path, 200, seed=7, partitions=2, bucket_count=4)
+def _build_jobs(spark, path):
+    """Job ids started while building validate_clips over a fresh read and
+    a fresh codec dim (as each benchmark pass does)."""
     df = spark.read.parquet(path)  # schema inference may run a job: not ours
     sc = spark.sparkContext
     group = "psf-test-{}".format(uuid.uuid4().hex)
@@ -53,8 +53,22 @@ def test_validate_clips_plan_build_starts_no_jobs(spark, tmp_path):
             df, G.codec_dim(spark), seed=7, with_pcm_checks=True, row_key="row_ord")
     finally:
         sc._jsc.clearJobGroup()
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], \
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_validate_clips_plan_build_starts_no_jobs(spark, tmp_path):
+    path = str(tmp_path / "clips")
+    G.write_clips(spark, path, 200, seed=7, partitions=2, bucket_count=4)
+    assert _build_jobs(spark, path) == [], \
         "validate_clips started Spark jobs before the action"
+
+
+def test_repeat_validate_clips_plan_build_starts_no_jobs(spark, tmp_path):
+    path = str(tmp_path / "clips")
+    G.write_clips(spark, path, 200, seed=7, partitions=2, bucket_count=4)
+    _build_jobs(spark, path)
+    assert _build_jobs(spark, path) == [], \
+        "a repeat validate_clips started Spark jobs before the action"
 
 
 def test_create_dataframe_only_in_the_helper():
